@@ -17,6 +17,7 @@ REPRESENTATIVE = [
     "asof_last_order",
     "window_topk_parts",
     "dedup_near_minhash",
+    "dedup_clusters",
     "embedding_topk",
     "rollup_orders",
 ]
@@ -142,30 +143,39 @@ def test_priority_window_integrity():
     priority name exists, no duplicates anywhere, priority entries lead,
     and the remainder is ordered least-recently-driver-verified first
     (genuine round-robin — nothing parks permanently outside the window)."""
-    from waterbear_spark.queries import catalog
+    import __spark_entry__ as entry
 
-    names = list(catalog.QUERIES)
+    queries = entry.queries()
+    names = list(queries)
     assert len(names) == len(set(names))
-    for k in catalog._PRIORITY:
-        assert k in catalog.QUERIES, f"priority entry {k} missing"
+    for k in entry._PRIORITY:
+        assert k in queries, f"priority entry {k} missing"
     # priority entries lead the window verbatim
-    head = [k for k in catalog._PRIORITY if k in catalog.QUERIES]
+    head = [k for k in entry._PRIORITY if k in queries]
     assert names[: len(head)] == head
 
     # the rest must be sorted by (last verified round, name): stalest
     # evidence rotates to the front, never-verified (round 0) before all
-    # — except _DEFER names (new this round, locally certified), which
-    # sort as round _DEFER_ROUND so they don't crowd the older backlog
-    last = catalog._last_verified_round()
+    last = entry._last_verified_round()
     rest = names[len(head):]
-    key = lambda k: (  # noqa: E731
-        catalog._DEFER_ROUND if k in catalog._DEFER else last.get(k, 0),
-        k,
-    )
-    assert rest == sorted(rest, key=key)
-    for k in catalog._DEFER:
-        assert k in catalog.QUERIES, f"deferred entry {k} missing"
+    assert rest == sorted(rest, key=lambda k: (last.get(k, 0), k))
 
+    oracles = entry.oracle_sql()
     window = names[:50]
-    rows_only = [k for k in window if k not in catalog.ORACLE_SQL]
+    rows_only = [k for k in window if k not in oracles]
     assert rows_only in ([], ["approx_distinct"]), rows_only
+    assert list(oracles) == [k for k in names if k in ORACLE_SQL]
+
+
+def test_merge_rejects_a_name_defined_twice():
+    """Two query modules defining one name is an error, not a silent
+    overwrite of the first by the second."""
+    from types import SimpleNamespace
+
+    from waterbear_spark.queries import catalog
+
+    a = SimpleNamespace(__name__="stub_a", QUERIES={"q": 1}, ORACLES={"q": "a"})
+    b = SimpleNamespace(__name__="stub_b", QUERIES={"q": 2}, ORACLES={})
+    with pytest.raises(ValueError, match=r"stub_b redefines \['q'\]"):
+        catalog._merge([a, b])
+    assert catalog._merge([a]) == ({"q": 1}, {"q": "a"})

@@ -1,13 +1,11 @@
-"""Large-star/small-star connected components: equivalence to a
-union-find reference on adversarial graph shapes, and the catalog twin's
-agreement with the min-label implementation."""
+"""Connected components: both tiers of the single size dispatch (driver
+union-find, large-star/small-star loop) against a union-find reference
+on adversarial graph shapes."""
 
 import random
 
-import pytest
-from pyspark.sql import functions as F
-
 from tests.conftest import SF_SMOKE
+from waterbear_spark.operators import starcc
 from waterbear_spark.operators.starcc import star_connected_components
 
 
@@ -66,18 +64,6 @@ def test_random_graphs_match_union_find(spark):
         _check(spark, edges)
 
 
-def test_catalog_twin_matches_min_label(spark):
-    from waterbear_spark.queries.llm import dedup_clusters, dedup_clusters_star
-
-    a = sorted(
-        map(tuple, dedup_clusters(spark, SF_SMOKE).collect())
-    )
-    b = sorted(
-        map(tuple, dedup_clusters_star(spark, SF_SMOKE).collect())
-    )
-    assert a == b
-
-
 def test_lateral_decorrelates_to_window_join(spark):
     """The LATERAL top-k must become a ranked window join, not a
     per-row nested loop."""
@@ -94,8 +80,8 @@ def test_lateral_decorrelates_to_window_join(spark):
 
 
 def test_above_threshold_driver_tier_matches(spark):
-    # > SPARK_GRAFT_CC_LOCAL_MAX (512) distinct edges but under the
-    # driver-tier bound: exercises the bounded-collect union-find
+    # 700 distinct edges, under the driver-tier bound: exercises the
+    # bounded-collect union-find
     rng = random.Random(11)
     seen = set()
     while len(seen) < 700:
@@ -106,9 +92,9 @@ def test_above_threshold_driver_tier_matches(spark):
 
 
 def test_above_threshold_distributed_path_matches(spark, monkeypatch):
-    # driver tier disabled: exercises the alternating-star loop (the
-    # 100 TB path) post-dispatch on the same 700-edge graph
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX", "0")
+    # driver tier bound lowered to 0: exercises the alternating-star
+    # loop (the 100 TB path) post-dispatch on the same 700-edge graph
+    monkeypatch.setattr(starcc, "_DRIVER_MAX_EDGES", 0)
     rng = random.Random(11)
     seen = set()
     while len(seen) < 700:
@@ -119,11 +105,7 @@ def test_above_threshold_distributed_path_matches(spark, monkeypatch):
 
 
 def test_local_and_distributed_paths_agree(spark, monkeypatch):
-    # same 300-edge graph through all three engines: identical label
-    # sets. Dispatch order is driver tier FIRST, so the row-local fold
-    # only runs with the driver tier disabled (r11 advice: the old
-    # first collect silently used the driver tier and compared it to
-    # itself).
+    # same 300-edge graph through both tiers: identical label sets
     rng = random.Random(13)
     seen = set()
     while len(seen) < 300:
@@ -131,49 +113,49 @@ def test_local_and_distributed_paths_agree(spark, monkeypatch):
         if a != b:
             seen.add((min(a, b), max(a, b)))
     df = spark.createDataFrame(sorted(seen), "src long, dst long")
-    # row-local fold: driver tier off, 300 <= LOCAL_MAX default (512)
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX", "0")
-    local = {
-        (r.vertex, r.component) for r in star_connected_components(df).collect()
-    }
-    # driver union-find: default driver tier dispatches first
-    monkeypatch.delenv("SPARK_GRAFT_CC_DRIVER_MAX")
+    # driver union-find: 300 <= the default bound
     driver = {
         (r.vertex, r.component) for r in star_connected_components(df).collect()
     }
-    # alternating-star loop: both bounded tiers off
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX", "0")
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX", "0")
+    # alternating-star loop: driver tier bound below the graph
+    monkeypatch.setattr(starcc, "_DRIVER_MAX_EDGES", 0)
     dist = {
         (r.vertex, r.component) for r in star_connected_components(df).collect()
     }
-    assert local == driver == dist
+    assert driver == dist
 
 
 def test_over_threshold_graph_never_collects(spark, monkeypatch):
     """The driver tier's collect is gated on the already-paid signature
-    count: a graph over SPARK_GRAFT_CC_DRIVER_MAX edges must fall through
-    to the next tier without _driver_components ever being invoked — an
-    unbounded future consumer cannot silently collect (r11 verdict #8)."""
-    from waterbear_spark.operators import starcc
+    count: a graph over _DRIVER_MAX_EDGES edges must go to the star loop
+    without _driver_components ever being invoked — an unbounded future
+    consumer cannot silently collect."""
 
     def _boom(*a, **k):
         raise AssertionError("driver tier collected an over-threshold graph")
 
     monkeypatch.setattr(starcc, "_driver_components", _boom)
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX", "10")
+    monkeypatch.setattr(starcc, "_DRIVER_MAX_EDGES", 10)
     edges = [(i, i + 1) for i in range(40)]  # 40 > 10: over the tier bound
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {(r.vertex, r.component) for r in star_connected_components(df).collect()}
-    want = set(_union_find_components(edges).items())
-    assert got == want  # row-local fold tier (40 <= LOCAL_MAX) answered
-    # and with BOTH bounded tiers off the star loop itself answers
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX", "0")
-    got2 = {(r.vertex, r.component) for r in star_connected_components(df).collect()}
-    assert got2 == want
+    assert got == set(_union_find_components(edges).items())
+
+
+def test_driver_tier_leaves_no_persisted_rdd(spark):
+    """The entry edge cache the signature fills is dropped once the
+    driver collect has run: a driver-tier call adds no RDD to the
+    session's persisted set. (Compared by id, not by size: the context
+    cleaner may drop an earlier test's star-loop checkpoints meanwhile.)"""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    df = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "src long, dst long")
+    got = {(r.vertex, r.component) for r in star_connected_components(df).collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)}
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
 
 
 def test_long_chain_above_threshold(spark, monkeypatch):
     # 600-edge path graph: adversarial diameter for the distributed loop
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX", "0")
+    monkeypatch.setattr(starcc, "_DRIVER_MAX_EDGES", 0)
     _check(spark, [(i, i + 1) for i in range(600)])

@@ -1,25 +1,31 @@
-"""Large-star/small-star connected components (Kiveris et al. 2014,
-"Connected Components in MapReduce and Beyond").
+"""Connected components: the one CC entry point of the library.
 
-This is the scale path that [[dedup_clusters]]'s min-label loop documents
-as its 100 TB swap: label propagation converges in O(diameter) rounds,
-while the alternating star transforms converge in O(log^2 n) rounds on
-ANY graph shape — the difference between 3 rounds and 300 on a chain-y
-near-dup graph. Each round is two shuffles (a min-aggregate and an edge
-re-emit join); no step materializes anything larger than the edge list,
-and every operation is a combinable DataFrame aggregate or equi-join.
+``star_connected_components`` makes a single size dispatch on the edge
+count its convergence signature already pays for. A graph of at most
+``_DRIVER_MAX_EDGES`` distinct edges is labeled from one bounded collect
+and a driver union-find. A larger graph runs the alternating
+large-star/small-star transforms (Kiveris et al. 2014, "Connected
+Components in MapReduce and Beyond"), which converge in O(log^2 n)
+rounds on ANY graph shape, where min-label propagation pays
+O(diameter) — 3 rounds against 300 on a chain-shaped near-dup graph.
+Each star round is two shuffles (a min-aggregate and an edge re-emit
+join); no step materializes anything larger than the edge list, and
+every operation is a combinable DataFrame aggregate or equi-join.
 
 Contract: input is an undirected edge list in any orientation (self-loops
 ignored); output is one (vertex, component) row per vertex incident to at
-least one edge, with component = the minimum vertex id in its component —
-byte-identical to the min-label formulation, which is what lets the two
-implementations share one oracle.
+least one edge, with component = the minimum vertex id in its component.
+Both tiers produce it exactly, which is what lets every caller share one
+recursive-closure oracle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Largest graph the driver tier collects: 65,536 16-byte edge rows, ~1 MB.
+_DRIVER_MAX_EDGES = 65536
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -69,9 +75,9 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 def _driver_components(edges: DataFrame, session) -> DataFrame:
     """Components of a BOUNDED (u, v) edge frame via one bounded collect
-    + driver union-find rooted at the minimum vertex id — the
-    (vertex, component) contract shared by every CC path. Callers gate
-    on an already-paid edge count; see star_connected_components."""
+    + driver union-find rooted at the minimum vertex id — the same
+    (vertex, component) contract as the star loop. The one caller,
+    star_connected_components, gates it on an already-paid edge count."""
     parent: dict[int, int] = {}
 
     def _find(x: int) -> int:
@@ -97,21 +103,24 @@ def star_connected_components(
     edges_df: DataFrame, src: str = "src", dst: str = "dst",
     max_rounds: int = 50,
 ) -> DataFrame:
-    """Alternating large-star/small-star to a fixpoint.
+    """Connected components of an undirected edge list.
 
-    Returns (vertex BIGINT, component BIGINT). ``max_rounds`` is a safety
-    cap far above the O(log^2 n) bound; convergence is detected by the
-    canonical edge set reaching a fixpoint (checked with one count per
-    round — a scalar, not a collect of the edges).
+    Returns (vertex BIGINT, component BIGINT). At most
+    ``_DRIVER_MAX_EDGES`` distinct edges run the driver union-find;
+    above it the alternating large-star/small-star loop runs to a
+    fixpoint. ``max_rounds`` is a safety cap far above the O(log^2 n)
+    bound; convergence is detected by the canonical edge set reaching a
+    fixpoint (checked with one count per round — a scalar, not a
+    collect of the edges).
     """
-    edges = (
+    entry = (
         edges_df.select(
             F.col(src).cast("bigint").alias("u"),
             F.col(dst).cast("bigint").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
+        .persist()
     )
     def _signature(e: DataFrame):
         """One combinable aggregate: (n_edges, sum(u), sum(v), sum(hash)).
@@ -126,42 +135,20 @@ def star_connected_components(
         ).collect()[0]
         return tuple(row)
 
-    sig = _signature(edges)
-    # size-adaptive dispatch (the signature's count is already paid): a
-    # pair graph below the threshold — near-dup clusters are a
-    # pairs-sized relation, tiny vs the corpus — computes its components
-    # row-locally over one packed edge array (microg.cc_labels_local,
-    # identical min-reachable output contract) instead of paying 2-4
-    # serialized micro-stages per star round. Above the threshold the
-    # alternating-star loop below is the 100 TB path, unchanged. The
-    # dial is data-size-adaptive, not cluster-tuned: the default bounds
-    # the row-local fold's O(rounds * nodes * edges) work, not local[32].
-    import os as _os
-
-    # BOUNDED-graph tier: a graph under SPARK_GRAFT_CC_DRIVER_MAX edges
-    # (e.g. grid_dbscan's <= 32x32-cell * 9-neighbour adjacency, or a
-    # near-dup pair graph — pairs-sized, tiny vs the corpus) computes
-    # its components with one bounded collect (<= 65536 16-byte edge
-    # rows, ~1 MB at the default) and a driver union-find, instead of 3
-    # shuffles + 2 driver jobs per star round. Same bounded-driver-
-    # scalar discipline as the k-row k-means seeds (wave20) and
-    # theil_sen's median selection; the count gating the collect is the
-    # signature count already paid above. Union roots by MIN vertex id,
-    # so the root of every tree is the component's minimum — the exact
-    # output contract of the other paths. Measured vs the interpreted
-    # row-local fold on the 256-edge sf0.1 near-dup graph: the fold
-    # pays 1.2-1.7 s of per-element expression evaluation, the driver
-    # union-find ~0.05 s — so the driver tier dispatches FIRST, and the
-    # fold (microg.cc_labels_local) remains the no-driver fallback for
-    # tiny graphs when the tier is disabled (SPARK_GRAFT_CC_DRIVER_MAX=0).
-    driver_max = int(_os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX", "65536"))
-    if sig[0] <= driver_max:
-        return _driver_components(edges, edges_df.sparkSession)
-    local_max = int(_os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX", "512"))
-    if sig[0] <= local_max:
-        from waterbear_spark.operators import microg
-
-        return microg.cc_labels_local(microg.pack_edges(edges, "u", "v"))
+    # the signature fills the entry cache, and its count is the one size
+    # dispatch: a bounded graph (grid_dbscan's cell adjacency, a near-dup
+    # pair graph — pairs-sized, tiny vs the corpus) is collected once
+    # into a driver union-find instead of paying 3 shuffles + 2 driver
+    # jobs per star round. The collect is gated on this already-paid
+    # count, so an unbounded graph never reaches the driver. Both tiers
+    # return a frame that no longer reads the entry cache, so it is
+    # dropped before returning.
+    sig = _signature(entry)
+    if sig[0] <= _DRIVER_MAX_EDGES:
+        labels = _driver_components(entry, edges_df.sparkSession)
+        entry.unpersist()
+        return labels
+    edges = entry
     for _ in range(max_rounds):
         after = _small_star(_large_star(edges)).localCheckpoint()
         new_sig = _signature(after)
@@ -180,6 +167,7 @@ def star_connected_components(
         else:
             edges = after
         sig = new_sig
+    entry.unpersist()
     return (
         edges.select(F.col("u").alias("vertex"), F.col("v").alias("component"))
         .union(edges.select(F.col("v").alias("vertex"), F.col("v").alias("component")))

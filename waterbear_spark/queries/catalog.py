@@ -1,275 +1,53 @@
 """Unified query registry: every implemented operator from SURVEY.md §2
 -> (Spark callable, DuckDB oracle SQL). ``__spark_entry__.py`` re-exports
 this for the driver harness.
+
+The registry is every module of this package that defines ``QUERIES``
+(with its ``ORACLES``), plus ``functions.udfs``: the pandas_* queries
+that intentionally exercise the Arrow/pandas UDF surface. Everything
+else stays UDF-free by policy EXCEPT the documented per-bucket BLAS
+family (embedding_knn_label, dedup_embedding_cosine, semdedup_cells,
+knn_hubness_audit): bounded-bucket cosine scoring is the one shape where
+an Arrow-batched matmul beats Catalyst folds ~8-15x (see SCALE.md).
 """
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
+from types import ModuleType
+
+import waterbear_spark.queries as _package
 from waterbear_spark.functions import udfs
-from waterbear_spark.queries import (
-    behavior,
-    corpusprep,
-    graph,
-    llm,
-    mining,
-    multimodal_queries,
-    quality_queries,
-    reconcile,
-    relational,
-    relational_ext,
-    relational_more,
-    retrieval,
-    skew_queries,
-    sqlsurface,
-    streaming_queries,
-    textops,
-    timeseries,
-    tpch_more,
-    tpch_rest,
-    wave3,
-    wave4,
-    wave5,
-    wave6,
-    wave7,
-    wave8,
-    wave9,
-    wave10,
-    wave11,
-    wave12,
-    wave13,
-    wave14,
-    wave15,
-    wave16,
-    wave17,
-    wave18,
-    wave19,
-    wave20,
-    wave21,
-    wave22,
-    wave23,
-    wave24,
-    wave25,
-    wave26,
-    wave27,
-    wave28,
-    wave29,
-    wave30,
-)
 
-QUERIES = {
-    **relational.QUERIES,
-    **behavior.QUERIES,
-    **relational_ext.QUERIES,
-    **relational_more.QUERIES,
-    **tpch_more.QUERIES,
-    **tpch_rest.QUERIES,
-    **graph.QUERIES,
-    **llm.QUERIES,
-    **textops.QUERIES,
-    **quality_queries.QUERIES,
-    **reconcile.QUERIES,
-    **multimodal_queries.QUERIES,
-    **streaming_queries.QUERIES,
-    **skew_queries.QUERIES,
-    **sqlsurface.QUERIES,
-    **corpusprep.QUERIES,
-    **timeseries.QUERIES,
-    **retrieval.QUERIES,
-    **mining.QUERIES,
-    **wave3.QUERIES,
-    **wave4.QUERIES,
-    **wave5.QUERIES,
-    **wave6.QUERIES,
-    **wave7.QUERIES,
-    **wave8.QUERIES,
-    **wave9.QUERIES,
-    **wave10.QUERIES,
-    **wave11.QUERIES,
-    **wave12.QUERIES,
-    **wave13.QUERIES,
-    **wave14.QUERIES,
-    **wave15.QUERIES,
-    **wave16.QUERIES,
-    **wave17.QUERIES,
-    **wave18.QUERIES,
-    **wave19.QUERIES,
-    **wave20.QUERIES,
-    **wave21.QUERIES,
-    **wave22.QUERIES,
-    **wave23.QUERIES,
-    **wave24.QUERIES,
-    **wave25.QUERIES,
-    **wave26.QUERIES,
-    **wave27.QUERIES,
-    **wave28.QUERIES,
-    **wave29.QUERIES,
-    **wave30.QUERIES,
-    # pandas_* queries intentionally exercise the Arrow/pandas UDF surface.
-    # Everything else stays UDF-free by policy EXCEPT the documented
-    # per-bucket BLAS family (embedding_knn_label, dedup_embedding_cosine,
-    # semdedup_cells, knn_hubness_audit): bounded-bucket cosine scoring is the one shape where
-    # an Arrow-batched matmul beats Catalyst folds ~8-15x (see SCALE.md)
-    **udfs.QUERIES,
-}
 
-ORACLE_SQL = {
-    **relational.ORACLES,
-    **behavior.ORACLES,
-    **relational_ext.ORACLES,
-    **relational_more.ORACLES,
-    **tpch_more.ORACLES,
-    **tpch_rest.ORACLES,
-    **graph.ORACLES,
-    **llm.ORACLES,
-    **textops.ORACLES,
-    **quality_queries.ORACLES,
-    **reconcile.ORACLES,
-    **multimodal_queries.ORACLES,
-    **streaming_queries.ORACLES,
-    **skew_queries.ORACLES,
-    **sqlsurface.ORACLES,
-    **corpusprep.ORACLES,
-    **timeseries.ORACLES,
-    **retrieval.ORACLES,
-    **mining.ORACLES,
-    **wave3.ORACLES,
-    **wave4.ORACLES,
-    **wave5.ORACLES,
-    **wave6.ORACLES,
-    **wave7.ORACLES,
-    **wave8.ORACLES,
-    **wave9.ORACLES,
-    **wave10.ORACLES,
-    **wave11.ORACLES,
-    **wave12.ORACLES,
-    **wave13.ORACLES,
-    **wave14.ORACLES,
-    **wave15.ORACLES,
-    **wave16.ORACLES,
-    **wave17.ORACLES,
-    **wave18.ORACLES,
-    **wave19.ORACLES,
-    **wave20.ORACLES,
-    **wave21.ORACLES,
-    **wave22.ORACLES,
-    **wave23.ORACLES,
-    **wave24.ORACLES,
-    **wave25.ORACLES,
-    **wave26.ORACLES,
-    **wave27.ORACLES,
-    **wave28.ORACLES,
-    **wave29.ORACLES,
-    **wave30.ORACLES,
-    **udfs.ORACLES,
-}
+def _query_modules() -> list[ModuleType]:
+    modules = []
+    for info in pkgutil.iter_modules(_package.__path__, f"{_package.__name__}."):
+        if info.name == __name__:
+            continue
+        module = importlib.import_module(info.name)
+        if hasattr(module, "QUERIES"):
+            modules.append(module)
+    return modules + [udfs]
+
+
+def _merge(modules: list[ModuleType]) -> tuple[dict, dict]:
+    """One ``(QUERIES, ORACLE_SQL)`` pair from the modules' ``QUERIES`` /
+    ``ORACLES`` dicts; a name that two modules define is an error."""
+    queries: dict = {}
+    oracles: dict = {}
+    for module in modules:
+        for merged, part in ((queries, module.QUERIES), (oracles, module.ORACLES)):
+            clash = merged.keys() & part.keys()
+            if clash:
+                raise ValueError(f"{module.__name__} redefines {sorted(clash)}")
+            merged.update(part)
+    return queries, oracles
+
+
+QUERIES, ORACLE_SQL = _merge(_query_modules())
 
 # every oracle key must have a query twin (the reverse may lag for
 # non-SQL-expressible ops, which get rows-only checks)
 assert set(ORACLE_SQL) <= set(QUERIES), "oracle without query"
-
-# The driver's correctness harness validates the catalog in dict order
-# with a bounded window (first 50), so ordering decides which operators
-# get cross-engine evidence each round. The rotation is a genuine
-# round-robin driven by the committed evidence itself: each query's
-# last-verified round is read from the CORRECTNESS_r*.json files at the
-# repo root, and the catalog orders by
-#
-#   1. _PRIORITY — this round's new or semantics-changed queries, whose
-#      prior evidence (if any) predates the change;
-#   2. everything else, least-recently-driver-verified first (never
-#      verified sorts as round 0), name as the deterministic tie-break.
-#
-# So every round the window covers: fixed/new queries, then the largest
-# never-verified slice, then the STALEST previously-verified queries —
-# no query parks permanently outside the window, and a regression in a
-# long-validated query resurfaces once its evidence becomes the oldest.
-# CORRECTNESS_LOCAL.json (scripts/check_oracle.py, full catalog) remains
-# the per-round local certification on top.
-_PRIORITY = [
-    # --- round 11 ---
-    # the one catalog row with no driver-green record anywhere (its
-    # same-commit 3-scale certs are in CORRECTNESS_LOCAL_R10/SF1E):
-    # its deferred rotation, the r10 verdict's #1 ask — after this the
-    # cumulative driver record is 314/314. The r11 persist of the band
-    # relation in the capped path (llm._band_candidates) is plan-only;
-    # values re-certified at three scales in the same commit
-    # (CORRECTNESS_LOCAL_R11).
-    "dedup_near_minhash_capped",
-    # plans changed this round, values certified unchanged at three
-    # scales (CORRECTNESS_LOCAL_R11_*): rake_keywords swapped its
-    # negated-char-class punctuation pass for the positive-class
-    # extract (2.6x at sf1); winnowing_fingerprints and
-    # dedup_cross_modal fan their CPU-dense scan stages to cluster
-    # width (AQE_PROBE_r11 A/B: 1.21x / 1.14x)
-    "rake_keywords",
-    "winnowing_fingerprints",
-    "dedup_cross_modal",
-    # same treatment, second wave: scan-width fan-out on the four
-    # heavy-tail rows whose A/B showed a 1.7-1.9x win at the bench
-    # scale (plus the manifest the rewrite shares); plan-only, values
-    # in the same 3-scale cert
-    "containment_join",
-    "profile_table",
-    "dup_span_rewrite",
-    "dup_span_removal_manifest",
-    "incremental_dedup_merge",
-    # the 9-slot head + approx_distinct's rows-only slot leave 40
-    # window slots for the stalest previously-verified rows — exactly
-    # the r4 floor (40 rows), so after this rotation the stale floor
-    # is >= r5, continuing the freshness ratchet.
-]
-
-# Queries introduced THIS round whose driver evidence can wait one
-# rotation: they sort as if verified in round _DEFER_ROUND so they
-# don't crowd the older never-verified names out of the 50-slot window.
-# Deferral REQUIRES committed same-round local certification (see
-# README "certification rule"). Round 11 adds no new queries.
-_DEFER: set[str] = set()
-_DEFER_ROUND = 11
-
-
-def _last_verified_round() -> dict[str, int]:
-    """name -> latest driver round whose CORRECTNESS_r*.json records a
-    passing check (hash match, or rows match for rows-only ops). A failed
-    or absent check contributes nothing, so such queries sort as stale."""
-    import json
-    import re
-    from pathlib import Path
-
-    last: dict[str, int] = {}
-    root = Path(__file__).resolve().parents[2]
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", path.stem)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            data = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        for name, res in data.items():
-            if not isinstance(res, dict):
-                continue
-            ok = res.get("hash_match") or (
-                res.get("err") is None and res.get("rows_match")
-            )
-            if ok:
-                last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
-def _reorder(mapping: dict) -> dict:
-    last = _last_verified_round()
-    head = [k for k in _PRIORITY if k in mapping]
-    rest = sorted(
-        (k for k in mapping if k not in set(head)),
-        key=lambda k: (
-            _DEFER_ROUND if k in _DEFER else last.get(k, 0),
-            k,
-        ),
-    )
-    return {k: mapping[k] for k in head + rest}
-
-
-QUERIES = _reorder(QUERIES)
-ORACLE_SQL = _reorder(ORACLE_SQL)

@@ -21,6 +21,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark.operators.starcc import star_connected_components
 from waterbear_spark.queries.tables import (
     DEC,
     davg,
@@ -426,115 +427,31 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachable from it) and an ``is_canonical`` keep-flag — the step that
     turns pairwise dedup output into an actionable keep/drop list.
 
-    Algorithm: iterative min-label propagation to a fixpoint — each round,
-    every vertex takes the min of its own label and its neighbours'
-    (converges in graph-diameter rounds; near-dup clusters are shallow, so
-    2-3 rounds in practice). This is the standard Spark pattern for
-    iterative graph algorithms: a driver loop over DataFrame joins with
-    ``localCheckpoint`` per round to truncate lineage, NOT a recursive SQL
-    — at 100 TB you'd swap the loop body for large-star/small-star
-    (Kiveris et al. 2014) which halves rounds on high-diameter graphs, but
-    the operator shape (join + min-agg per round) is identical.
+    Algorithm: ``operators.starcc.star_connected_components``. A pair
+    graph within ``starcc._DRIVER_MAX_EDGES`` (near-dup clusters are
+    pairs-sized, tiny vs the corpus) is labeled from one bounded collect
+    and a driver union-find; a larger one runs the alternating
+    large-star/small-star transform (Kiveris et al. 2014), whose
+    O(log^2 n) rounds hold on ANY graph shape, where label propagation
+    pays O(diameter) — the difference that matters on chain-shaped
+    near-dup graphs (template drift, shingled boilerplate). Served under
+    both catalog names ``dedup_clusters`` and ``dedup_clusters_star``.
 
     Oracle: DuckDB ``WITH RECURSIVE`` transitive closure (min reachable
     id), exact on the sparse pair graph.
     """
     pairs = dedup_near_minhash(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .persist()
+    labels = star_connected_components(pairs, src="doc_a", dst="doc_b")
+    sizes = labels.groupBy("component").agg(
+        F.count(F.lit(1)).alias("cluster_size")
     )
-    # size-adaptive dispatch, mirroring starcc: a pair graph this small
-    # (near-dup clusters are pairs-sized, tiny vs the corpus) labels its
-    # components from one bounded collect + driver union-find (r11: the
-    # interpreted row-local fold measured 1.2-1.7 s on the 256-edge
-    # sf0.1 graph vs ~0.05 s for the union-find; cc_labels_local remains
-    # the no-driver fallback when the tier is disabled); the distributed
-    # min-label loop below is the unbounded-graph path.
-    import os as _os
-
-    n_edges = edges.count()
-    half = edges.filter(F.col("src") < F.col("dst")).select(
-        F.col("src").alias("u"), F.col("dst").alias("v")
-    )
-    driver_max = int(_os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX", "65536"))
-    local_max = int(_os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX", "512"))
-    if n_edges <= 2 * driver_max or n_edges <= 2 * local_max:
-        from waterbear_spark.operators import microg, starcc
-
-        if n_edges <= 2 * driver_max:
-            labels = starcc._driver_components(half, spark)
-            # the union-find collected eagerly — the returned frame is a
-            # materialized createDataFrame that never reads the edge
-            # cache again, so drop it now (r11 advice: the entry was a
-            # pure leak in this branch; the row-local fold below, by
-            # contrast, reads the persisted edges lazily)
-            edges.unpersist()
-        else:
-            # pack the canonical (a < b) half of the PERSISTED symmetric
-            # list — half the edge array for the same components; edges
-            # stays persisted, the returned plan reads it lazily
-            labels = microg.cc_labels_local(
-                microg.pack_edges(half, "u", "v")
-            )
-        labels = labels.select(
-            F.col("vertex").alias("doc_id"), F.col("component").alias("comp")
-        )
-        sizes = labels.groupBy("comp").agg(
-            F.count(F.lit(1)).alias("cluster_size")
-        )
-        return (
-            labels.join(sizes, "comp")
-            .select(
-                "doc_id",
-                F.col("comp").alias("cluster_id"),
-                F.col("cluster_size").cast("int").alias("cluster_size"),
-                (F.col("doc_id") == F.col("comp")).alias("is_canonical"),
-            )
-            .orderBy("doc_id")
-        )
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("comp", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    for _ in range(25):  # safety cap far above any plausible diameter
-        nmin = (
-            edges.join(
-                labels.select(F.col("doc_id").alias("dst_id"), "comp"),
-                F.col("dst") == F.col("dst_id"),
-            )
-            .groupBy("src")
-            .agg(F.min("comp").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(nmin, labels["doc_id"] == nmin["src"], "left")
-            .select(
-                "doc_id",
-                F.least(F.col("comp"), F.coalesce("nmin", "comp")).alias("comp"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.select("doc_id", F.col("comp").alias("old")), "doc_id")
-            .filter(F.col("comp") < F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    sizes = labels.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
-        labels.join(sizes, "comp")
+        labels.join(sizes, "component")
         .select(
-            "doc_id",
-            F.col("comp").alias("cluster_id"),
+            F.col("vertex").alias("doc_id"),
+            F.col("component").alias("cluster_id"),
             F.col("cluster_size").cast("int").alias("cluster_size"),
-            (F.col("doc_id") == F.col("comp")).alias("is_canonical"),
+            (F.col("vertex") == F.col("component")).alias("is_canonical"),
         )
         .orderBy("doc_id")
     )
@@ -569,46 +486,13 @@ ORDER BY doc_id
 """
 
 
-def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same near-dup clustering as [[dedup_clusters]], computed by
-    the alternating large-star/small-star transform
-    (``operators/starcc.py``) instead of min-label propagation — the
-    O(log^2 n)-round algorithm that min-label's docstring names as its
-    100 TB swap, here implemented and held to the identical output
-    contract (and the identical recursive-closure oracle). Two engines,
-    two algorithms, one answer.
-
-    Scale: each round is two shuffles bounded by the edge list; round
-    count is O(log^2 n) on ANY graph shape, where min-label pays
-    O(diameter) — the difference that matters on chain-shaped near-dup
-    graphs (template drift, shingled boilerplate).
-    """
-    from waterbear_spark.operators.starcc import star_connected_components
-
-    pairs = dedup_near_minhash(spark, sf_dir).select("doc_a", "doc_b")
-    labels = star_connected_components(pairs, src="doc_a", dst="doc_b")
-    sizes = labels.groupBy("component").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return (
-        labels.join(sizes, "component")
-        .select(
-            F.col("vertex").alias("doc_id"),
-            F.col("component").alias("cluster_id"),
-            F.col("cluster_size").cast("int").alias("cluster_size"),
-            (F.col("vertex") == F.col("component")).alias("is_canonical"),
-        )
-        .orderBy("doc_id")
-    )
-
-
 def leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-aware train/validation/test split: the md5 lottery of
     [[deterministic_split]] keyed on the near-dup CLUSTER id instead of
     the document id, so near-duplicate documents can never straddle
     splits — the leakage mode that silently inflates eval numbers when
     val/test contain near-copies of training docs. Clusters come from
-    the star-CC labels ([[dedup_clusters_star]]); singletons key on
+    the CC labels of [[dedup_clusters]]; singletons key on
     their own doc_id. Output: per-split census plus the computed
     cross-split leakage count — zero by construction, and the oracle
     (recursive-closure CC + the same lottery) certifies it rather than
@@ -619,8 +503,6 @@ def leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     census is one 3-group aggregate. The leakage check is an aggregate
     over |groups| rows.
     """
-    from waterbear_spark.operators.starcc import star_connected_components
-
     docs = table(spark, sf_dir, "documents").select("doc_id")
     pairs = dedup_near_minhash(spark, sf_dir).select("doc_a", "doc_b")
     labels = star_connected_components(pairs, src="doc_a", dst="doc_b")
@@ -2488,7 +2370,7 @@ QUERIES = {
     "dedup_near_minhash": dedup_near_minhash,
     "dedup_near_minhash_capped": dedup_near_minhash_capped,
     "dedup_clusters": dedup_clusters,
-    "dedup_clusters_star": dedup_clusters_star,
+    "dedup_clusters_star": dedup_clusters,
     "leakage_free_split": leakage_free_split,
     "decontaminate_overlap": decontaminate_overlap,
     "embedding_topk": embedding_topk,

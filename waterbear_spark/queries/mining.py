@@ -38,8 +38,7 @@ def _neighborhood_pairs(
     block-join argument); ``max_dist`` sets the edit-distance verify.
     ``window`` (neighborhood width) and ``prefix_len`` (rank-partition
     prefix) are the two scale knobs — defaults are the catalog
-    semantics; ``scripts/er_knob_bench.py`` measures the trade
-    (ER_KNOB_BENCH.json).
+    semantics; ER_KNOB_BENCH_r08.json records the measured trade.
 
     ``prefix_len=None`` (r10) widens the prefix with the corpus — 1
     char up to ~30k rows, 2 to ~3M, 3 beyond — so per-group window
@@ -272,9 +271,9 @@ LIMIT {_PAIR_TOPK}
 
 
 def _er_survivorship(members: DataFrame) -> DataFrame:
-    """The survivorship tail shared by [[er_golden_records]] and
-    ``scripts/er_knob_bench.py``: ONE golden record per component from a
-    ``(p_partkey, p_name, p_retailprice, component)`` relation.
+    """The survivorship tail of [[er_golden_records]]: ONE golden record
+    per component from a ``(p_partkey, p_name, p_retailprice, component)``
+    relation.
 
     Saturation cap (round 7 — the r6 verdict's ER watch item; round 8
     restores the per-entity contract): the part-name vocabulary is
